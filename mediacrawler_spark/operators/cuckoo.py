@@ -136,10 +136,6 @@ def _lookup(state: np.ndarray, url_hash: np.ndarray, n_buckets: int) -> np.ndarr
     )
 
 
-def _empty_state(params: CuckooParams) -> np.ndarray:
-    return np.zeros((params.n_buckets, _SLOTS), dtype=np.uint16)
-
-
 def _from_bytes(b: bytes, params: CuckooParams) -> np.ndarray:
     return (
         np.frombuffer(b, dtype=np.uint16).reshape(params.n_buckets, _SLOTS).copy()

@@ -32,7 +32,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -83,42 +83,6 @@ class BloomParams:
         return BloomParams(n_shards=n_shards, m_bits=m, k=min(k, 16))
 
 
-def build_bloom_shards(seen: DataFrame, params: BloomParams):
-    """Distributed Bloom build → broadcast variable {shard_id: bitmap bytes}.
-
-    The per-shard bitmaps are built executor-side with ``applyInPandas``
-    (partial build where the data lives), then only the compact bitmaps are
-    collected and broadcast — never the key set itself.
-    """
-    m_bits, k, n_shards = params.m_bits, params.k, params.n_shards
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
-        if len(pdf):
-            _set_bits(bitmap, _positions(pdf["url_hash"].to_numpy(np.int64), k, m_bits))
-        return pd.DataFrame(
-            {"shard": [int(pdf["shard"].iloc[0])], "bitmap": [bitmap.tobytes()]}
-        )
-
-    shard_rows = (
-        seen.select(F.col("url_hash"), F.pmod(F.col("url_hash"), F.lit(n_shards)).alias("shard"))
-        .groupBy("shard")
-        .applyInPandas(
-            build,
-            schema=T.StructType(
-                [
-                    T.StructField("shard", T.IntegerType(), False),
-                    T.StructField("bitmap", T.BinaryType(), False),
-                ]
-            ),
-        )
-        .collect()
-    )
-    shards = {int(r["shard"]): np.frombuffer(r["bitmap"], dtype=np.uint8) for r in shard_rows}
-    spark = seen.sparkSession
-    return spark.sparkContext.broadcast({"shards": shards, "m_bits": m_bits, "k": k, "n_shards": n_shards})
-
-
 def bloom_maybe_seen_udf(shards_bc):
     """Scalar pandas UDF: url_hash → bool (possibly in the seen set)."""
 
@@ -148,10 +112,12 @@ def bloom_maybe_seen_udf(shards_bc):
 def build_bloom_table(keys: DataFrame, params: BloomParams) -> DataFrame:
     """Distributed Bloom build → DataFrame(shard int, bitmap binary).
 
-    Unlike :func:`build_bloom_shards` nothing is collected to the driver —
-    the bitmaps stay distributed so they can be OR-merged and persisted in
-    the snapshot catalog (incremental maintenance) or cogroup-probed
-    (shard-wise, no all-shards broadcast). Empty shards have no row.
+    The per-shard bitmaps are built executor-side with ``applyInPandas``
+    and nothing is collected to the driver — the bitmaps stay distributed
+    so they can be OR-merged and persisted in the snapshot catalog
+    (incremental maintenance), collected by :func:`broadcast_bloom` when
+    small, or cogroup-probed (shard-wise, no all-shards broadcast). Empty
+    shards have no row.
     """
     m_bits, k, n_shards = params.m_bits, params.k, params.n_shards
 
@@ -274,32 +240,6 @@ def dedup_against_seen_bloom(
     definitely_new = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybe = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
     confirmed_new = maybe.join(seen.select("url_hash"), on="url_hash", how="left_anti")
-    return definitely_new.unionByName(confirmed_new)
-
-
-def dedup_against_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    spark: SparkSession,
-    params: BloomParams | None = None,
-    shards_bc=None,
-) -> DataFrame:
-    """Rows of ``candidates`` whose url_hash is NOT in ``seen`` — exactly.
-
-    Bloom prefilter splits the work: definitely-new rows skip the shuffle
-    join entirely; only maybe-seen rows (true dups + fpp false positives)
-    pay the exact ``left_anti``. Correctness never depends on the filter.
-    """
-    if shards_bc is None:
-        params = params or BloomParams.size(max(seen.count(), 1024))
-        shards_bc = build_bloom_shards(seen, params)
-    probe = bloom_maybe_seen_udf(shards_bc)
-    probed = candidates.withColumn("_maybe_seen", probe(F.col("url_hash")))
-    definitely_new = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    confirmed_new = maybe.join(
-        seen.select("url_hash"), on="url_hash", how="left_anti"
-    )
     return definitely_new.unionByName(confirmed_new)
 
 

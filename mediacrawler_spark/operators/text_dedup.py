@@ -261,10 +261,12 @@ def simhash(
     recombination is bit-identical (verified over the full corpus:
     0 mismatches in 50k signatures), measured 1.75x faster (the 64
     separate aggregate updates dominated the signature pass, guide
-    §1.2 step 2). Bound: a 16-bit lane counter saturates at 65,536
-    DISTINCT tokens in one doc — ~0.5 MB of unique words, far past any
-    real document (the packing/span operators chunk pathological docs
-    long before this)."""
+    §1.2 step 2). Bound: at most 32,767 DISTINCT tokens in one doc. The
+    lower 16-bit lanes wrap at 65,536, but the top lane holds the sign
+    bit of the long: 32,768 tokens setting one top-lane bit push the sum
+    to 2^63, which Spark's ANSI mode rejects with an overflow error.
+    That is ~0.25 MB of unique words, far past any real document (the
+    packing/span operators chunk pathological docs long before this)."""
     hash_fn = token_hash or F.xxhash64
     if n_bits % 4:
         raise ValueError("n_bits must be divisible by 4 for lane packing")

@@ -63,6 +63,11 @@ from mediacrawler_spark.schemas import FRONTIER_SCHEMA, SEEN_SCHEMA
 from mediacrawler_spark.sinks.snapshot import SnapshotCatalog
 from mediacrawler_spark.sources.fetch import fetch_via_corpus
 
+_QUARANTINE_SCHEMA = "host string, quarantined_until int"
+_FETCH_LOG_SCHEMA = (
+    "epoch int, host string, host_rank int, url string, kind string, status int"
+)
+
 
 @dataclass
 class EngineConfig:
@@ -175,9 +180,11 @@ class CrawlEngine:
         self._host_col = host_of(F.col("url"))
 
     # -- state accessors (resume-aware) --------------------------------------
-    def _frontier(self) -> DataFrame:
-        df = self.catalog.read("frontier")
-        return df if df is not None else self.spark.createDataFrame([], FRONTIER_SCHEMA)
+    def _read(self, table: str, schema) -> DataFrame:
+        """Committed ``table``, or an empty frame of ``schema`` while the
+        catalog holds no rows of it."""
+        df = self.catalog.read(table)
+        return df if df is not None else self.spark.createDataFrame([], schema)
 
     def _frontier_nparts(self) -> int:
         """Partition count of the frontier ptable — pinned in the snapshot
@@ -185,22 +192,6 @@ class CrawlEngine:
         only seeds a fresh catalog."""
         ent = self.catalog.ptable_meta("frontier")
         return int(ent["n"]) if ent else self.cfg.frontier_partitions
-
-    def _seen(self) -> DataFrame:
-        df = self.catalog.read("seen")
-        return df if df is not None else self.spark.createDataFrame([], SEEN_SCHEMA)
-
-    def _candidates(self) -> DataFrame:
-        df = self.catalog.read("candidates")
-        return df if df is not None else self.spark.createDataFrame([], FRONTIER_SCHEMA)
-
-    def _quarantine(self) -> DataFrame:
-        df = self.catalog.read("quarantine")
-        if df is not None:
-            return df
-        return self.spark.createDataFrame(
-            [], "host string, quarantined_until int"
-        )
 
     # -- persistent bloom state (incremental URL-seen prefilter) -------------
     def _load_bloom(self) -> dict | None:
@@ -392,18 +383,10 @@ class CrawlEngine:
         return meta
 
     def documents(self) -> DataFrame:
-        span_rows = self.catalog.read("span_rows")
-        if span_rows is None:
-            span_rows = self.spark.createDataFrame([], SPAN_ROWS_SCHEMA)
-        return assemble_documents(span_rows)
+        return assemble_documents(self._read("span_rows", SPAN_ROWS_SCHEMA))
 
     def fetch_log(self) -> DataFrame:
-        df = self.catalog.read("fetch_log")
-        if df is None:
-            return self.spark.createDataFrame(
-                [], "epoch int, host string, host_rank int, url string, kind string, status int"
-            )
-        return df
+        return self._read("fetch_log", _FETCH_LOG_SCHEMA)
 
     def _maybe_grow_frontier(self) -> bool:
         """Double the frontier partition count when the largest committed
@@ -435,65 +418,35 @@ class CrawlEngine:
         self.catalog.commit(self.catalog.committed_epoch())
         return True
 
-    def _migrate_legacy_state(self) -> None:
-        """Fold a pre-ptable snapshot (frontier/bloom committed as FULL
-        replace tables, rounds ≤2) into the partitioned layout with one
-        full-dirty migration commit before the first resumed epoch.
-
-        Without this, resuming an old-format snapshot silently corrupts
-        state (ADVICE r03 medium): ``read_parts('frontier', dirty)``
-        returns None — the epoch's touched set collapses to the admitted
-        delta, losing every committed deferred frontier row — and
-        ``stage_parts('bloom', base=None)`` keeps only dirty pins, so
-        clean shards vanish and the definitely-new fast path (which skips
-        the left_anti confirm) re-admits already-seen URLs."""
-        needs = [
-            t
-            for t in ("frontier", "bloom")
-            if self.catalog.legacy_version(t) is not None
-        ]
-        if not needs:
-            return
-        if "frontier" in needs:
-            n = self.cfg.frontier_partitions
-            df = self.catalog.read("frontier")
-            self.catalog.stage_parts(
-                df.withColumn(
-                    "_part", F.pmod(F.col("url_hash"), F.lit(n)).cast("int")
-                ),
-                "frontier",
-                n,
-                list(range(n)),
-            )
-            self.catalog.drop_table("frontier")
-        if "bloom" in needs:
-            m = self.catalog.meta().get("bloom") or {}
-            n_shards = int(m.get("n_shards", self.cfg.bloom_shards))
-            self._stage_bloom(self.catalog.read("bloom"), n_shards, list(range(n_shards)))
-            self.catalog.drop_table("bloom")
-        self.catalog.commit(self.catalog.committed_epoch())
-
     # -- the loop -------------------------------------------------------------
     def run(self, seeds: DataFrame | None, max_epochs: int | None = None) -> RunResult:
         """Run (or resume) the crawl until the frontier drains.
 
         ``seeds`` is only consumed on a fresh catalog; on resume the
-        candidate/frontier state comes from the last commit.
+        candidate/frontier state comes from the last commit. A snapshot
+        that pins ``frontier`` or ``bloom`` as a full (pre-partitioned)
+        table is refused with ``ValueError`` before anything is written:
+        the epoch reads and rewrites those tables by partition only.
         """
         cfg = self.cfg
         result = RunResult()
-        self._migrate_legacy_state()
+        for t in ("frontier", "bloom"):
+            if self.catalog.has(t) and self.catalog.ptable_meta(t) is None:
+                raise ValueError(
+                    f"snapshot pins {t!r} as a full table (pre-partitioned "
+                    "format); this engine resumes partitioned snapshots only"
+                )
         start_epoch = self.catalog.committed_epoch() + 1
         if start_epoch == 0:
             if seeds is None:
                 raise ValueError("fresh run needs seeds")
             candidates = seeds_to_candidates(seeds, epoch=0)
         else:
-            candidates = self._candidates()
+            candidates = self._read("candidates", FRONTIER_SCHEMA)
 
-        frontier = self._frontier()
-        seen = self._seen()
-        quarantine = self._quarantine()
+        frontier = self._read("frontier", FRONTIER_SCHEMA)
+        seen = self._read("seen", SEEN_SCHEMA)
+        quarantine = self._read("quarantine", _QUARANTINE_SCHEMA)
         bloom = self._load_bloom()
 
         for epoch in range(start_epoch, start_epoch + (max_epochs or cfg.max_epochs)):
@@ -717,10 +670,10 @@ class CrawlEngine:
             # included — its lazy union chain would otherwise reference
             # every past epoch's fetched dir, growing the plan per epoch
             # and dangling once maintenance expires those dirs)
-            frontier = self._frontier()
-            seen = self._seen()
-            candidates = self._candidates()
-            quarantine = self._quarantine()
+            frontier = self._read("frontier", FRONTIER_SCHEMA)
+            seen = self._read("seen", SEEN_SCHEMA)
+            candidates = self._read("candidates", FRONTIER_SCHEMA)
+            quarantine = self._read("quarantine", _QUARANTINE_SCHEMA)
 
             result.epochs.append(
                 EpochStats(epoch, n_admitted, n_dedup, n_fetched, n_emitted)

@@ -18,6 +18,17 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_mem() -> str:
+    """24g, or half of physical RAM on a smaller host — a 24g heap on a
+    15 GB machine lets the JVM grow until the kernel OOM-kills it."""
+    cap_mb = 24 << 10
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError):  # no sysconf (non-POSIX)
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "mediacrawler_spark",
     cpus: int | None = None,
@@ -40,7 +51,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
+        )
         .config("spark.ui.enabled", "false")
         # Shuffle/spill to tmpfs when available: the sandbox's /tmp is a
         # shared spinning disk, which serializes shuffles and masks CPU

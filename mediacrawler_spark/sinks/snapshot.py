@@ -11,12 +11,6 @@ this module implements the same contract over parquet:
   point (torn writes of uncommitted parquet dirs are simply never
   referenced, exactly like Iceberg's metadata-pointer swap),
 - resume = read the last complete commit line.
-
-``merge_upsert`` reproduces the reference's SELECT-then-INSERT-or-UPDATE
-sink (store/xhs/xhs_store_impl.py:114-172): ``when matched update``
-preserves insert-only columns (``add_ts`` — xhs_store_impl.py:130-131),
-``when not matched insert``. Implemented as anti-join + union (the
-MERGE INTO emulation for a parquet-backed table).
 """
 
 from __future__ import annotations
@@ -38,6 +32,15 @@ def parquet_rows(path: str) -> int:
     return ds.dataset(path, format="parquet").count_rows()
 
 
+def _dir_bytes(path: str) -> int:
+    """On-disk bytes under ``path`` — a driver-side walk, no Spark job."""
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _dirs, files in os.walk(path)
+        for f in files
+    )
+
+
 class TimeTravelError(LookupError):
     """A time-travel read (``read_at``) outside the retained window:
     either the commit log has been rolled past the requested epoch, or a
@@ -55,28 +58,46 @@ class SnapshotCatalog:
         self._pending: dict[str, int] = {}
         self._pending_appends: dict[str, list[int]] = {}
         self._pending_parts: dict[str, dict] = {}
-        self._pending_drops: set[str] = set()
         self._versions: dict[str, int] = {}
-        self._appends: dict[str, list[int]] = {}
+        self._appends: dict[str, list[str]] = {}
         self._ptables: dict[str, dict] = {}
         self._meta: dict = {}
+        self._epoch = -1
         # The log is parsed ONCE, here. Steady-state epoch-loop reads
         # (committed_epoch via compact_appends ×6 tables every 8 epochs)
         # come from this cache — re-parsing the ever-growing jsonl per
         # call was O(E²·P) cumulative over a long crawl (VERDICT r03 #1).
         recs = self._read_commits()
         self._n_commits = len(recs)
-        self._epoch = -1
-        last = recs[-1] if recs else None
-        if last:
-            self._epoch = int(last["epoch"])
-            self._versions = dict(last["tables"])
-            self._appends = {k: list(v) for k, v in last.get("appends", {}).items()}
-            self._ptables = {
-                k: {"n": int(v["n"]), "parts": dict(v["parts"])}
-                for k, v in last.get("ptables", {}).items()
-            }
-            self._meta = dict(last.get("meta", {}))
+        if recs:
+            self._load_record(recs[-1])
+
+    def _load_record(self, rec: dict) -> None:
+        """Reset the in-memory pin cache to one commit record's state."""
+        self._epoch = int(rec["epoch"])
+        self._versions = dict(rec["tables"])
+        self._appends = {
+            k: [str(x) for x in v] for k, v in rec.get("appends", {}).items()
+        }
+        self._ptables = {
+            k: {"n": int(v["n"]), "parts": dict(v["parts"])}
+            for k, v in rec.get("ptables", {}).items()
+        }
+        self._meta = dict(rec.get("meta", {}))
+
+    def _require_no_pending(self, op: str) -> None:
+        """Metadata ops (compaction, pruning, DELETE, log roll/rollback)
+        run between epochs only: with staged state pending they would
+        publish a half-finished epoch, so they are refused outright to
+        preserve crash atomicity."""
+        if self._pending or self._pending_appends or self._pending_parts:
+            raise RuntimeError(
+                f"{op} with uncommitted staged state would publish "
+                "a half-finished epoch — commit or discard the pending "
+                f"stages first (pending={sorted(self._pending)}, "
+                f"pending_appends={sorted(self._pending_appends)}, "
+                f"pending_parts={sorted(self._pending_parts)})"
+            )
 
     # -- commit log ---------------------------------------------------------
     def _read_commits(self) -> list[dict]:
@@ -102,10 +123,6 @@ class SnapshotCatalog:
                     continue  # torn crash remnant — never a record prefix
         return recs
 
-    def last_commit(self) -> dict | None:
-        recs = self._read_commits()
-        return recs[-1] if recs else None
-
     def committed_epoch(self) -> int:
         return self._epoch
 
@@ -123,16 +140,16 @@ class SnapshotCatalog:
         recent commits stay discoverable. Refused with pending staged
         state (same atomicity argument as compact_appends). Returns True
         if a roll happened."""
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError("roll_log with uncommitted staged state")
+        self._require_no_pending("roll_log")
         if self._n_commits <= max_lines:
             return False
-        recs = self._read_commits()[-max(1, keep):]
+        self._rewrite_log(self._read_commits()[-max(1, keep):])
+        return True
+
+    def _rewrite_log(self, recs: list[dict]) -> None:
+        """Replace the log with ``recs`` atomically: write a temp file,
+        fsync it, rename it over the log — a crash at any point leaves
+        either the old log or the new one, never a mix."""
         tmp = self._log + ".tmp"
         with open(tmp, "w") as f:
             for r in recs:
@@ -141,11 +158,15 @@ class SnapshotCatalog:
             os.fsync(f.fileno())
         os.replace(tmp, self._log)
         self._n_commits = len(recs)
-        return True
 
     # -- table io ------------------------------------------------------------
     def _path(self, table: str, version: int) -> str:
         return os.path.join(self.root, table, f"v={version}")
+
+    def _append_path(self, table: str, label) -> str:
+        """Dir of one append increment: an epoch, or a ``c<epoch>_<n>``
+        compaction/rewrite label."""
+        return os.path.join(self.root, table, f"e={label}")
 
     def stage(self, df: DataFrame, table: str) -> None:
         """Write the next full version of ``table`` (not yet visible).
@@ -167,7 +188,7 @@ class SnapshotCatalog:
         schema-id analog that lets :meth:`_read_append_dirs` support
         add/drop-column schema evolution across epochs without the
         footer-scan cost of ``mergeSchema``."""
-        path = os.path.join(self.root, table, f"e={epoch}")
+        path = self._append_path(table, epoch)
         df.write.mode("overwrite").parquet(path)
         self._write_dir_schema(path, df)
         self._pending_appends.setdefault(table, []).append(str(epoch))
@@ -317,26 +338,6 @@ class SnapshotCatalog:
             *self._ptable_paths({"n": ent["n"], "parts": sub}, table)
         )
 
-    def legacy_version(self, table: str) -> int | None:
-        """Version pin of a FULL replace table for a name that is NOT a
-        ptable — the pre-partitioned snapshot format (rounds ≤2 committed
-        frontier/bloom this way). Migration detection hook: a resumed
-        crawl must fold such tables into the partitioned layout before
-        the first epoch (ADVICE r03 medium — read_parts() of a legacy
-        table returns None, silently dropping committed deferred frontier
-        rows and clean bloom shards)."""
-        if self._ptables.get(table) or self._pending_parts.get(table):
-            return None
-        return self._pending.get(table, self._versions.get(table))
-
-    def drop_table(self, table: str) -> None:
-        """Unpin a full replace table at the next commit. Used by ptable
-        migration: the contents move into the partitioned layout in the
-        same commit, and the stale full-table pin must not linger (the
-        ptable expiry sweep deletes legacy version dirs, which would
-        strand the pin and fail fsck)."""
-        self._pending_drops.add(table)
-
     def ptable_meta(self, table: str) -> dict | None:
         """Committed pin map of a partitioned table ({'n': P, 'parts': …})."""
         ent = self._ptables.get(table)
@@ -350,16 +351,12 @@ class SnapshotCatalog:
         ent = self._ptables.get(table)
         if not ent:
             return {}
-        out: dict[int, int] = {}
-        for k, v in ent["parts"].items():
-            leaf = os.path.join(self._path(table, int(v)), f"_part={int(k)}")
-            total = 0
-            for dirpath, _dirs, files in os.walk(leaf):
-                total += sum(
-                    os.path.getsize(os.path.join(dirpath, f)) for f in files
-                )
-            out[int(k)] = total
-        return out
+        return {
+            int(k): _dir_bytes(
+                os.path.join(self._path(table, int(v)), f"_part={int(k)}")
+            )
+            for k, v in ent["parts"].items()
+        }
 
     def ptable_rows(self, table: str) -> int:
         """Row count of the committed partitioned table from parquet
@@ -375,8 +372,6 @@ class SnapshotCatalog:
         fill count — the Iceberg snapshot-properties analog); it replaces
         the previous commit's meta wholesale for the keys given."""
         tables = {**self._versions, **self._pending}
-        for t in self._pending_drops:
-            tables.pop(t, None)
         appends = {
             t: sorted(
                 {str(x) for x in self._appends.get(t, [])}
@@ -416,15 +411,10 @@ class SnapshotCatalog:
         self._pending = {}
         self._pending_appends = {}
         self._pending_parts = {}
-        self._pending_drops = set()
 
     def meta(self) -> dict:
         """Snapshot properties of the last commit (empty dict if none)."""
         return dict(self._meta)
-
-    def read_staged_version(self, table: str) -> DataFrame:
-        """Read the staged (pending) full version of a replace table."""
-        return self.spark.read.parquet(self._path(table, self._pending[table]))
 
     def staged_rows(self, table: str) -> int:
         """Row count of a staged replace-table version — parquet footers
@@ -434,13 +424,13 @@ class SnapshotCatalog:
     def staged_append_rows(self, table: str, epoch: int) -> int:
         """Row count of a staged epoch increment — parquet footers only,
         zero Spark jobs."""
-        return parquet_rows(os.path.join(self.root, table, f"e={epoch}"))
+        return parquet_rows(self._append_path(table, epoch))
 
     def read_staged(self, table: str, epoch: int) -> DataFrame:
         """Read one staged (not yet committed) epoch increment back — used
         to materialize a stage mid-epoch so downstream consumers don't
         recompute its plan."""
-        return self.spark.read.parquet(os.path.join(self.root, table, f"e={epoch}"))
+        return self.spark.read.parquet(self._append_path(table, epoch))
 
     def read(self, table: str) -> DataFrame | None:
         ent = self._ptables.get(table)
@@ -450,11 +440,10 @@ class SnapshotCatalog:
             return self.spark.read.parquet(*self._ptable_paths(ent, table))
         if table in self._versions:
             return self.spark.read.parquet(self._path(table, self._versions[table]))
-        epochs = self._appends.get(table)
-        if not epochs:
+        labels = self._appends.get(table)
+        if not labels:
             return None
-        paths = [os.path.join(self.root, table, f"e={e}") for e in epochs]
-        return self._read_append_dirs(paths)
+        return self._read_append_dirs(self._pin_paths(table, ("append", labels)))
 
     def commit_history(self) -> list[dict]:
         """Every commit record still retained in the log, oldest first —
@@ -507,7 +496,7 @@ class SnapshotCatalog:
             return self._ptable_paths({"parts": pin}, table)
         if kind == "version":
             return [self._path(table, pin)]
-        return [os.path.join(self.root, table, f"e={e}") for e in pin]
+        return [self._append_path(table, lab) for lab in pin]
 
     def read_at(self, table: str, epoch: int) -> DataFrame | None:
         """Time-travel read (Iceberg ``VERSION AS OF`` analog): the
@@ -578,9 +567,7 @@ class SnapshotCatalog:
         if not new:
             return None
         return self._read_pinned(
-            table,
-            to_epoch,
-            [os.path.join(self.root, table, f"e={e}") for e in new],
+            table, to_epoch, self._pin_paths(table, ("append", new))
         )
 
     @staticmethod
@@ -624,9 +611,7 @@ class SnapshotCatalog:
             if not new:
                 return None
             df = self._read_pinned(
-                table,
-                to_epoch,
-                [os.path.join(self.root, table, f"e={e}") for e in new],
+                table, to_epoch, self._pin_paths(table, ("append", new))
             )
             return df.withColumn("_change_type", F.lit("insert"))
         # ptable partition pruning: diff only partitions whose pin moved
@@ -717,13 +702,7 @@ class SnapshotCatalog:
         (:class:`RuntimeError`) with pending staged state, same
         atomicity stance as :meth:`compact_appends`. Returns the restored
         commit record."""
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError("rollback_to with uncommitted staged state")
+        self._require_no_pending("rollback_to")
         recs = self._read_commits()
         idx = [i for i, r in enumerate(recs) if int(r["epoch"]) == epoch]
         if not idx:
@@ -740,24 +719,8 @@ class SnapshotCatalog:
                 f"rollback to epoch {epoch} unavailable: {len(missing)} "
                 f"pinned dir(s) expired/compacted (first: {missing[0]})"
             )
-        tmp = self._log + ".tmp"
-        with open(tmp, "w") as f:
-            for r in keep:
-                f.write(json.dumps(r) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._log)
-        self._n_commits = len(keep)
-        self._epoch = int(target["epoch"])
-        self._versions = dict(target["tables"])
-        self._appends = {
-            k: [str(x) for x in v] for k, v in target.get("appends", {}).items()
-        }
-        self._ptables = {
-            k: {"n": int(v["n"]), "parts": dict(v["parts"])}
-            for k, v in target.get("ptables", {}).items()
-        }
-        self._meta = dict(target.get("meta", {}))
+        self._rewrite_log(keep)
+        self._load_record(target)
         return target
 
     def has(self, table: str) -> bool:
@@ -777,9 +740,8 @@ class SnapshotCatalog:
             p = self._path(table, v)
             if not os.path.isdir(p):
                 problems.append(f"missing version dir: {p}")
-        for table, epochs in self._appends.items():
-            for e in epochs:
-                p = os.path.join(self.root, table, f"e={e}")
+        for table, labels in self._appends.items():
+            for p in self._pin_paths(table, ("append", labels)):
                 if not os.path.isdir(p):
                     problems.append(f"missing append dir: {p}")
         for table, ent in self._ptables.items():
@@ -787,8 +749,6 @@ class SnapshotCatalog:
                 if not os.path.isdir(p):
                     problems.append(f"missing partition dir: {p}")
         if not problems and self.has("lineage") and self.has("fetch_log"):
-            from pyspark.sql import functions as F
-
             lin = self.read("lineage").agg(F.sum("fetch_count").alias("s")).collect()[0]["s"]
             logn = self.read("fetch_log").count()
             if (lin or 0) != logn:
@@ -800,8 +760,6 @@ class SnapshotCatalog:
             # carries no fetch_count — otherwise per-partition sums of
             # any column are meaningless. Epochs written before this
             # format (no -1 row) are skipped.
-            from pyspark.sql import functions as F
-
             is_sum = F.col("partition_id") == -1
             shape = (
                 self.read("lineage")
@@ -842,31 +800,28 @@ class SnapshotCatalog:
                     )
         return problems
 
-    def _merge_append_dirs(self, table: str, labels: list[str]) -> str:
-        """Rewrite the given append dirs into one new compacted dir and
-        return its label (unique per table even within one epoch)."""
+    def _new_label(self, existing: set[str]) -> str:
+        """Claim the first ``c<epoch>_<n>`` label (epoch = the committed
+        head) not in ``existing`` — the name of a rewritten append dir,
+        unique per table even when several rewrites share an epoch."""
         epoch = self.committed_epoch()
-        existing = {str(x) for x in self._appends.get(table, [])}
         n = 0
         while (label := f"c{epoch}_{n}") in existing:
             n += 1
-        df = self._read_append_dirs(
-            [os.path.join(self.root, table, f"e={lab}") for lab in labels]
-        )
-        out = os.path.join(self.root, table, f"e={label}")
+        existing.add(label)
+        return label
+
+    def _merge_append_dirs(self, table: str, labels: list[str]) -> str:
+        """Rewrite the given append dirs into one new compacted dir and
+        return its label."""
+        label = self._new_label({str(x) for x in self._appends.get(table, [])})
+        df = self._read_append_dirs(self._pin_paths(table, ("append", labels)))
+        out = self._append_path(table, label)
         df.write.mode("overwrite").parquet(out)
         # the merged dir carries the union schema of its inputs, so
         # schema evolution survives compaction
         self._write_dir_schema(out, df)
         return label
-
-    def _append_dir_bytes(self, table: str, label: str) -> int:
-        total = 0
-        for dirpath, _dirs, files in os.walk(
-            os.path.join(self.root, table, f"e={label}")
-        ):
-            total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
-        return total
 
     def compact_appends(
         self, table: str, max_dirs: int = 32, tier_fanout: int = 4
@@ -889,18 +844,7 @@ class SnapshotCatalog:
         swap is a commit, so pending (uncommitted) stages would be
         published half-finished — refused outright to preserve crash
         atomicity. Returns True if a compaction ran."""
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError(
-                "compact_appends with uncommitted staged state would publish "
-                "a half-finished epoch — commit or discard the pending "
-                f"stages first (pending={sorted(self._pending)}, "
-                f"pending_appends={sorted(self._pending_appends)})"
-            )
+        self._require_no_pending("compact_appends")
         labels = [str(x) for x in self._appends.get(table, [])]
         small = [lab for lab in labels if not lab.startswith("c")]
         if len(small) <= max_dirs:
@@ -909,7 +853,9 @@ class SnapshotCatalog:
         compacted.append(self._merge_append_dirs(table, small))
         self._appends[table] = list(compacted)
         while len(compacted) > tier_fanout:
-            by_size = sorted(compacted, key=lambda lab: self._append_dir_bytes(table, lab))
+            by_size = sorted(
+                compacted, key=lambda lab: _dir_bytes(self._append_path(table, lab))
+            )
             tier, rest = by_size[:tier_fanout], by_size[tier_fanout:]
             merged = self._merge_append_dirs(table, tier)
             compacted = rest + [merged]
@@ -931,13 +877,7 @@ class SnapshotCatalog:
         atomicity stance as compact_appends: refused with pending staged
         state; the swap is a same-epoch metadata commit. Returns the
         number of increments dropped."""
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError("prune_appends with uncommitted staged state")
+        self._require_no_pending("prune_appends")
         labels = [str(x) for x in self._appends.get(table, [])]
 
         def label_epoch(lab: str) -> int:
@@ -979,13 +919,7 @@ class SnapshotCatalog:
         """
         from pyspark.sql import Column
 
-        if (
-            self._pending
-            or self._pending_appends
-            or self._pending_parts
-            or self._pending_drops
-        ):
-            raise RuntimeError("delete_where with uncommitted staged state")
+        self._require_no_pending("delete_where")
         if table in self._versions or table in self._ptables:
             raise ValueError(
                 "delete_where supports append tables only — rewrite "
@@ -997,24 +931,19 @@ class SnapshotCatalog:
         labels = [str(x) for x in self._appends.get(table, [])]
         if not labels:
             return 0
-        epoch = self.committed_epoch()
         existing = set(labels)
         deleted = 0
         new_labels: list[str] = []
         for lab in labels:
-            path = os.path.join(self.root, table, f"e={lab}")
-            df = self._read_append_dirs([path])
+            df = self._read_append_dirs([self._append_path(table, lab)])
             n_match = df.filter(cond).count()
             if n_match == 0:
                 new_labels.append(lab)
                 continue
             deleted += n_match
             kept = df.filter(~F.coalesce(cond, F.lit(False)))
-            n = 0
-            while (newlab := f"c{epoch}_{n}") in existing:
-                n += 1
-            existing.add(newlab)
-            out = os.path.join(self.root, table, f"e={newlab}")
+            newlab = self._new_label(existing)
+            out = self._append_path(table, newlab)
             kept_count = kept.count()
             if kept_count == 0:
                 continue  # fully-deleted increment: label simply vanishes
@@ -1024,14 +953,8 @@ class SnapshotCatalog:
         if deleted == 0:
             return 0  # nothing matched: no rewrite happened, no commit needed
         self._appends[table] = sorted(new_labels)
-        self.commit(epoch + 1)  # a NEW snapshot: content changed
+        self.commit(self.committed_epoch() + 1)  # a NEW snapshot: content changed
         return deleted
-
-    def _recent_commits(self, n: int) -> list[dict]:
-        """The last ``n`` complete commit records (oldest first). Bounded
-        by roll_log: the file never holds more than ~max_lines records in
-        the steady state, so this parse is O(max_lines), not O(E)."""
-        return self._read_commits()[-n:]
 
     def expire_versions(self, keep_last: int = 2) -> int:
         """Snapshot expiry (SURVEY §7.4 risk 5: state growth across
@@ -1050,7 +973,9 @@ class SnapshotCatalog:
 
         removed = 0
         # -- partitioned tables: keep leaves pinned by recent commits/pending
-        recent = self._recent_commits(keep_last)
+        # (bounded by roll_log: the log holds ~max_lines records in the
+        # steady state, so this parse is O(max_lines), not O(E))
+        recent = self._read_commits()[-keep_last:]
         pt_names = set(self._ptables) | set(self._pending_parts)
         for table in pt_names:
             keep: set[tuple[int, int]] = set()
@@ -1102,12 +1027,3 @@ class SnapshotCatalog:
                     removed += 1
         return removed
 
-
-def merge_upsert(existing: DataFrame | None, updates: DataFrame, key: str) -> DataFrame:
-    """MERGE INTO emulation: rows of ``updates`` win on key collision;
-    unmatched existing rows are kept. Insert-only column semantics are the
-    caller's job (pass updates that already carry the preserved values)."""
-    if existing is None:
-        return updates
-    kept = existing.join(updates.select(key).distinct(), on=key, how="left_anti")
-    return kept.unionByName(updates)

@@ -16,8 +16,8 @@ cost at local[4]). Now:
   equivalence is implied rather than separately re-run.
 - ``mid_crawl_ref``   — reference state at committed epoch 3 (prefix + 2
   unperturbed resumed epochs): the equality target for perturbed-resume
-  tests (log roll, legacy migration), which resume a mutated copy for the
-  same 2 epochs and must land in the byte-identical state. The engine is
+  tests (log roll), which resume a mutated copy for the same 2 epochs
+  and must land in the byte-identical state. The engine is
   deterministic, so state equality at epoch 3 pins full-run equality
   without paying for two more runs to completion.
 
@@ -182,8 +182,8 @@ def snapshot_state():
 @pytest.fixture(scope="session")
 def mid_crawl_ref(spark, udfs, crawl_cfg, partial_crawl, snapshot_state, tmp_path_factory):
     """Reference state at committed epoch 3: prefix + 2 UNPERTURBED
-    resumed epochs. Perturbed-resume tests (roll, migration) must land
-    exactly here after the same 2 epochs."""
+    resumed epochs. Perturbed-resume tests (log roll) must land exactly
+    here after the same 2 epochs."""
     root = str(tmp_path_factory.mktemp("snap_midref") / "cat")
     shutil.copytree(partial_crawl["root"], root)
     eng = _mk_engine(spark, udfs, crawl_cfg, root)

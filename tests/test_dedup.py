@@ -7,9 +7,7 @@ from mediacrawler_spark.operators.dedup import (
     BloomParams,
     bloom_maybe_seen_udf,
     broadcast_bloom,
-    build_bloom_shards,
     build_bloom_table,
-    dedup_against_seen,
     dedup_against_seen_bloom,
     dedup_within_batch,
     or_merge_bloom,
@@ -40,8 +38,7 @@ def test_bloom_no_false_negatives(spark):
     hashes = [h * 2_654_435_761 - 3 for h in range(2000)]
     seen = _seen(spark, hashes)
     params = BloomParams.size(2000, fpp=0.01, n_shards=8)
-    bc = build_bloom_shards(seen, params)
-    probe = bloom_maybe_seen_udf(bc)
+    probe = bloom_maybe_seen_udf(broadcast_bloom(build_bloom_table(seen, params), params))
     got = seen.select(probe(F.col("url_hash")).alias("m")).collect()
     assert all(r["m"] for r in got), "bloom must never miss a present key"
 
@@ -52,8 +49,7 @@ def test_bloom_fpp_bound(spark):
     absent = [a for a in absent if a not in set(present)]
     seen = _seen(spark, present)
     params = BloomParams.size(5000, fpp=0.01, n_shards=8)
-    bc = build_bloom_shards(seen, params)
-    probe = bloom_maybe_seen_udf(bc)
+    probe = bloom_maybe_seen_udf(broadcast_bloom(build_bloom_table(seen, params), params))
     df = spark.createDataFrame([(a,) for a in absent], "url_hash long")
     fp = df.select(probe(F.col("url_hash")).alias("m")).filter("m").count()
     assert fp / len(absent) < 0.05, f"fpp too high: {fp}/{len(absent)}"
@@ -64,8 +60,11 @@ def test_dedup_exactness_matches_plain_antijoin(spark):
     cand_hashes = list(range(0, 2000))
     seen = _seen(spark, seen_hashes)
     cands = _cands(spark, cand_hashes)
+    params = BloomParams.size(max(len(seen_hashes), 1024))
+    table = build_bloom_table(seen, params)
     got = sorted(
-        r["url_hash"] for r in dedup_against_seen(cands, seen, spark).collect()
+        r["url_hash"]
+        for r in dedup_against_seen_bloom(cands, seen, table, params).collect()
     )
     want = sorted(set(cand_hashes) - set(seen_hashes))
     assert got == want
@@ -76,19 +75,6 @@ def _bitmaps(bloom_df):
         int(r["shard"]): np.frombuffer(r["bitmap"], dtype=np.uint8)
         for r in bloom_df.collect()
     }
-
-
-def test_bloom_table_matches_broadcast_build(spark):
-    """The distributed (no-collect) table build produces bit-identical
-    shard bitmaps to the original broadcast build."""
-    hashes = [h * 2_654_435_761 - 3 for h in range(3000)]
-    seen = _seen(spark, hashes)
-    params = BloomParams.size(3000, fpp=0.01, n_shards=8)
-    want = build_bloom_shards(seen, params).value["shards"]
-    got = _bitmaps(build_bloom_table(seen, params))
-    assert set(got) == set(want)
-    for s in got:
-        assert np.array_equal(got[s], want[s])
 
 
 def test_incremental_or_merge_equals_full_build(spark):
